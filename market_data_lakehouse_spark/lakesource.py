@@ -19,9 +19,15 @@ case its added files still stream and the removals are skipped
 (Delta's ignoreChanges). Pure layout maintenance — compact /
 set_partitioning — moves bytes, not rows, and is always skipped.
 
-Output schema = the table's committed schema (hive partition columns
-restored from the directory names, evolved columns null-filled on
-pre-evolution files) plus ``_commit_version``. With
+Table state at stream start — schema history, column mapping,
+row-id bases — comes from ``TableLog.fold``, the one checkpoint +
+commit-tail fold that also defines a ``TransactionalLake``'s state at
+a version, so stream and table agree on schema resets, the
+``_last_checkpoint`` pointer and multipart checkpoints alike.
+
+Output schema = the table's schema at stream start (hive partition
+columns restored from the directory names, evolved columns
+null-filled on pre-evolution files) plus ``_commit_version``. With
 ``with_row_ids=true`` (requires ``enable_row_tracking()``) each row
 additionally carries its stable ``_row_id`` and
 ``_row_commit_version`` — row lineage in the stream, computed
@@ -62,7 +68,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
-LOG_DIR = "_txn_log"
+from market_data_lakehouse_spark.txnlog import (
+    LOG_DIR,
+    TableLog,
+    TableState,
+    TransactionalLake,
+)
+
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
@@ -84,112 +96,34 @@ def _read_commit(table_path: str, v: int) -> dict:
         return json.load(fh)
 
 
-def _latest_checkpoint(table_path: str) -> dict | None:
-    lp = _log_path(table_path)
-    if not os.path.isdir(lp):
-        return None
-    cps = sorted(
-        (f for f in os.listdir(lp) if f.endswith(".checkpoint")),
-        reverse=True,
-    )
-    for name in cps:
-        try:
-            with open(os.path.join(lp, name)) as fh:
-                return json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-    return None
-
-
-def _column_map(table_path: str) -> dict[str, str] | None:
-    """Active logical -> physical column map (column-mapping tables),
-    None when the feature is unused — the newest checkpoint's doc
-    plus the commit tail, last doc wins (mirrors
-    ``TransactionalLake._column_mapping_doc``)."""
-    cp = _latest_checkpoint(table_path)
-    doc = cp.get("column_mapping") if cp else None
-    start = cp["version"] + 1 if cp else 0
-    for v in _commit_versions(table_path):
-        if v < start:
-            continue
-        c = _read_commit(table_path, v)
-        if c.get("column_mapping") is not None:
-            doc = c["column_mapping"]
-    return dict(doc["cols"]) if doc else None
-
-
-def _table_schema(table_path: str) -> StructType:
-    """Latest committed schema, read straight from the log (newest
-    commit carrying one, else the newest checkpoint's history).
+def _table_schema(st: TableState, table_path: str) -> StructType:
+    """The table schema at the folded state: the MERGED batch-schema
+    history (r10: a narrow batch landing last must not hide evolved
+    columns from the stream; widest type wins on a widen_column_type
+    history; an overwrite's schema reset drops replaced columns).
     Column-mapping tables project to LOGICAL names — same contract
     as ``snapshot()``; the per-file reads still key on the physical
     names, which never change, so a mid-stream rename cannot break
     a running stream (it keeps its start-time schema until
     restart, like any Structured Streaming schema)."""
-    # the table schema is the MERGED batch-schema history (r10: a
-    # narrow batch landing last must not hide evolved columns from
-    # the stream), newest type wins per field, first-seen order
-    history: list[str] = []
-    cp = _latest_checkpoint(table_path)
-    start = 0
-    if cp and cp.get("schemas"):
-        history.extend(cp["schemas"])
-        start = cp["version"] + 1
-    for v in _commit_versions(table_path):
-        if v < start:
-            continue
-        c = _read_commit(table_path, v)
-        if c.get("schema_history"):
-            history.extend(c["schema_history"])
-        elif c.get("schema"):
-            history.append(c["schema"])
-    if not history:
+    if not st.schemas:
         raise ValueError(
             f"lake_changes: no committed schema found at {table_path!r}"
         )
-    # same union fold as the lake's own reads (widest type wins on a
-    # widen_column_type history, newest otherwise)
-    from market_data_lakehouse_spark.txnlog import TransactionalLake
-
     phys = StructType.fromJson(
         {
             "type": "struct",
-            "fields": TransactionalLake._merged_fields(history),
+            "fields": TransactionalLake._merged_fields(st.schemas),
         }
     )
-    cmap = _column_map(table_path)
-    if cmap is None:
+    if st.column_mapping is None:
         return phys
     by_phys = {f.name: f for f in phys.fields}
     out = StructType()
-    for logical, physical in cmap.items():
+    for logical, physical in st.column_mapping["cols"].items():
         f = by_phys.get(physical)
         if f is not None:
             out.add(logical, f.dataType, f.nullable)
-    return out
-
-
-def _row_base_map(table_path: str) -> dict[str, list[int]]:
-    """Immutable per-file base row-id map (row tracking): the newest
-    checkpoint's folded map plus every commit's ``row_base``
-    assignments. Empty when the feature is unused. Per-file bases
-    are write-once, so a plain union fold is exact."""
-    out: dict[str, list[int]] = {}
-    cp = _latest_checkpoint(table_path)
-    start = 0
-    if cp:
-        start = cp["version"] + 1
-        if cp.get("row_tracking"):
-            out.update(
-                {f: list(b) for f, b in cp["row_tracking"]["base"].items()}
-            )
-    for v in _commit_versions(table_path):
-        if v < start:
-            continue
-        for f, b in _read_commit(table_path, v).get(
-            "row_base", {}
-        ).items():
-            out[f] = list(b)
     return out
 
 
@@ -267,23 +201,27 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         self.with_row_ids = (
             str(options.get("with_row_ids", "false")).lower() == "true"
         )
-        # immutable per-file base row-id map, seeded at stream start;
-        # partitions() extends it from each planned commit's own
-        # row_base so files added mid-stream resolve without a refold
-        self._row_base: dict[str, list[int]] = (
-            _row_base_map(self.path) if self.with_row_ids else {}
-        )
-        if self.with_row_ids and not self._row_base:
-            raise ValueError(
-                "lake_changes: with_row_ids=true requires "
-                "enable_row_tracking() on the source table"
-            )
+        st = TableLog(self.path).fold()
+        # immutable per-file base row-id map, seeded at stream start
+        # with the live files' bases; partitions() extends it from
+        # each planned commit's own row_base so files added
+        # mid-stream resolve without a refold
+        self._row_base: dict[str, list[int]] = {}
+        if self.with_row_ids:
+            if st.row_tracking is None:
+                raise ValueError(
+                    "lake_changes: with_row_ids=true requires "
+                    "enable_row_tracking() on the source table"
+                )
+            self._row_base = dict(st.row_tracking["base"])
         self.schema = schema
         # logical -> physical translation for column-mapping tables:
         # schema names are logical, parquet/partition-dir names are
         # physical (resolved once at stream start; physical names
         # never change, so this stays valid for the stream's life)
-        self.cmap = _column_map(self.path) or {}
+        self.cmap = (
+            dict(st.column_mapping["cols"]) if st.column_mapping else {}
+        )
         # An Arrow type is only ever needed for a column that must be
         # SYNTHESIZED at read time — a hive partition value restored
         # from the directory name, or an evolved column null-filled
@@ -314,10 +252,9 @@ class LakeChangesStreamReader(DataSourceStreamReader):
     def initialOffset(self):
         versions = _commit_versions(self.path)
         oldest = versions[0] if versions else 0
-        cp = _latest_checkpoint(self.path)
-        if self.start_version < oldest and cp is not None and (
-            self.start_version <= cp["version"]
-        ):
+        # commits start at v0; a later oldest commit means vacuum_log
+        # removed the ones the stream would need
+        if self.start_version < oldest:
             raise ValueError(
                 f"lake_changes from v{self.start_version} predates log "
                 f"retention (oldest retained commit: v{oldest})"
@@ -578,7 +515,8 @@ class LakeChangesDataSource(DataSource):
         return "lake_changes"
 
     def schema(self) -> StructType:
-        base = _table_schema(self.options["path"])
+        path = self.options["path"]
+        base = _table_schema(TableLog(path).fold(), path)
         rt = (
             str(self.options.get("with_row_ids", "false")).lower()
             == "true"

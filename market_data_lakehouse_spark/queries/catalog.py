@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -183,6 +184,16 @@ def parquet_colrange_bound(
     try:
         out = _scan()
     except (OSError, ValueError, KeyError, TypeError, ImportError):
+        out = None
+    except AttributeError as exc:
+        # pyarrow API drift: degrade to "no bound" (the wide path)
+        # like any other unreadable footer, but say so — the r16
+        # blanket except hid exactly this class of bug
+        print(
+            f"parquet_colrange_bound({table}.{column}): footer "
+            f"stats unreadable ({exc!r}); narrowing gate off",
+            file=sys.stderr,
+        )
         out = None
     _COLRANGE_CACHE[key] = out
     return out

@@ -2962,7 +2962,7 @@ class LakeSQL:
         show through their own verbs."""
         name = m.group("tbl")
         lake = self.table(name)
-        idoc = lake._identity_doc()
+        idoc = lake.fold().identity
         doc = lake.column_mapping()
         inv = {p: lg for lg, p in doc.items()} if doc else {}
         gen = {

@@ -110,7 +110,7 @@ class TestBloomPruning:
             bloom_columns=("price",),  # double: not bloomable
         )
         lake.append(_bars(spark, ["A"], 0).coalesce(1))
-        assert lake._blooms_index() == {}
+        assert lake.fold().blooms == {}
         kept, total, _ = lake.prune_files({}, equals={"price": 100.0})
         assert (len(kept), total) == (1, 1)  # conservative keep
 
@@ -175,7 +175,7 @@ class TestBloomKernel:
             F.col("id").alias("event_id"), F.lit("x").alias("symbol")
         )
         lake.append(df.coalesce(1))
-        (bloom,) = lake._blooms_index().values()
+        (bloom,) = lake.fold().blooms.values()
         m = bloom["event_id"]["m"]
         assert m > BLOOM_M_MIN and m & (m - 1) == 0
         kept, _, _ = lake.prune_files({}, equals={"event_id": 999999})

@@ -356,6 +356,35 @@ class TestMergedStreamSchema:
         vals = {r.k: r.x for r in got.collect()}
         assert vals == {1: 100, 2: None}, vals
 
+    def test_stream_schema_follows_narrowing_overwrite(
+        self, spark, tmp_path
+    ):
+        """An overwrite restarts the schema history: the stream reads
+        the same folded table state as ``snapshot()``, so a column
+        the overwrite dropped does not come back in the stream."""
+        register_lake_changes_source(spark)
+        lake = TransactionalLake(
+            spark, str(tmp_path / "nw"), partition_by=()
+        )
+        lake.append(
+            spark.createDataFrame(
+                [(1, "a", 1.5)], "k long, sym string, price double"
+            )
+        )
+        lake.overwrite(spark.createDataFrame([(2, "b")], "k long, sym string"))
+        assert lake.snapshot().columns == ["k", "sym"]
+        got = _drain(
+            spark,
+            lake.path,
+            str(tmp_path / "out"),
+            str(tmp_path / "ck"),
+            ignore_deletes="true",
+        )
+        assert got.columns == lake.snapshot().columns + ["_commit_version"]
+        assert sorted((r.k, r.sym) for r in got.collect()) == [
+            (1, "a"), (2, "b"),
+        ]
+
 
 class TestRowIdStream:
     """r10: with_row_ids=true — row lineage in the stream. Ids are

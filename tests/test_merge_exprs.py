@@ -1098,7 +1098,7 @@ class TestReviewFindsR13:
         )
         # simulate a pre-r13 log: drop the recorded start
         lk = fr.table("lid")
-        idoc = lk._identity_doc()
+        idoc = lk.fold().identity
         assert idoc is not None
         lk._commit(
             {"op": "set_properties", "properties": {}}

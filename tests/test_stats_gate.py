@@ -208,6 +208,35 @@ class TestParquetFooterBound:
         assert jobs_stats < jobs_exact, (jobs_stats, jobs_exact)
 
 
+class TestColrangeApiDrift:
+    def test_attribute_error_degrades_with_warning(
+        self, tmp_path, monkeypatch, capsys
+    ):
+        """pyarrow API drift (an AttributeError inside the footer
+        scan) turns the narrowing gate off — a None bound, the wide
+        path — and says so on stderr instead of crashing the query
+        or degrading silently."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from market_data_lakehouse_spark.queries import catalog
+
+        pq.write_table(
+            pa.table({"id": [1, 2, 3]}), str(tmp_path / "t.parquet")
+        )
+
+        class _Drifted:
+            def __init__(self, path):
+                pass
+
+        monkeypatch.setattr(pq, "ParquetFile", _Drifted)
+        monkeypatch.setattr(catalog, "_COLRANGE_CACHE", {})
+        assert catalog.parquet_colrange_bound(
+            str(tmp_path), "t", "id"
+        ) is None
+        assert "parquet_colrange_bound(t.id)" in capsys.readouterr().err
+
+
 class TestFooterBoundGates:
     """r14 (VERDICT directive 6): the remaining exact-count gate
     sites answer from parquet footers — same output, zero count

@@ -33,7 +33,7 @@ def lake(spark, tmp_path):
 
 class TestStatsCollection:
     def test_commit_records_min_max(self, lake):
-        stats = lake._stats_index()
+        stats = lake.fold().stats
         assert stats, "no stats recorded"
         ks = sorted(s["k"] for s in stats.values() if "k" in s)
         assert ks == [[0, 99], [100, 199], [200, 299]]

@@ -1299,8 +1299,8 @@ class TestIdentityColumn:
         orig = lake._checked_write
         done = []
 
-        def racing(df, op, skip_empty=False):
-            out = orig(df, op, skip_empty=skip_empty)
+        def racing(df, op, skip_empty=False, **kw):
+            out = orig(df, op, skip_empty=skip_empty, **kw)
             if not done:
                 done.append(1)
                 other.append(_df(spark, [("RACE", 1)]))
@@ -1320,33 +1320,35 @@ class TestIdentityColumn:
 
     def test_identity_toctou_race_before_state_read(self, spark, tmp_path):
         """ADVICE r9 (TOCTOU): a commit that assigns ids and lands
-        AFTER the version capture but BEFORE the high-water-mark fold
-        must still trip the conflict scan. Pre-fix, append() read the
-        mark first and the version second, so a racer in that window
-        sat at v <= id_read_v — invisible to the scan — and both
-        writers claimed the same id range silently."""
+        right after append()'s state read must still trip the
+        conflict scan. Pre-fix, append() read the mark first and the
+        version second, so a racer between the two sat at
+        v <= id_read_v — invisible to the scan — and both writers
+        claimed the same id range silently. Now the mark and its
+        version come from one fold; the racer lands just after it."""
         path = str(tmp_path / "tx_toctou")
         lake = TransactionalLake(spark, path, partition_by=())
         lake.set_identity("row_id")
         other = TransactionalLake(spark, path, partition_by=())
 
-        real = lake._identity_doc  # append's state read (r12)
+        real = lake.fold  # append's one state read
         done = []
 
-        def racing(as_of=None):
+        def racing(version=None, timestamp=None):
+            st = real(version, timestamp)
             if not done:
                 done.append(1)
-                # lands between append()'s version capture and its
-                # state fold — exactly the pre-fix blind spot
+                # lands after append() read the identity mark and
+                # before it commits the ids it assigned from it
                 other.append(_df(spark, [("RACE", 1)]))
-            return real(as_of=as_of)
+            return st
 
-        lake._identity_doc = racing  # type: ignore[method-assign]
+        lake.fold = racing  # type: ignore[method-assign]
         try:
             with pytest.raises(RuntimeError, match="identity"):
                 lake.append(_df(spark, [("MINE", 2)]))
         finally:
-            lake._identity_doc = real  # type: ignore[method-assign]
+            lake.fold = real  # type: ignore[method-assign]
         # loser retries; ids stay unique and contiguous
         lake.append(_df(spark, [("MINE", 2)]))
         ids = sorted(r.row_id for r in lake.snapshot().collect())
@@ -3674,7 +3676,7 @@ class TestMergeSchemaEvolution:
         assert "score" in snap.columns
         got = {r.k: r.score for r in snap.collect()}
         assert got == {1: None, 2: 9.9, 3: None, 4: 4.4}
-        doc = lake._column_mapping_doc()
+        doc = lake.fold().column_mapping
         assert "score" in doc["cols"]
         # the evolved column renames like any other
         lake.rename_column("score", "conf")
@@ -3765,7 +3767,7 @@ class TestAddColumn:
         # the old bytes stay dead: re-added v reads NULL, not 99.0
         assert lake.snapshot().collect()[0].v is None
         # and the physical slot is fresh
-        doc = lake._column_mapping_doc()
+        doc = lake.fold().column_mapping
         assert doc["cols"]["v"] != "v"
         # rename still works on the re-added column
         lake.rename_column("v", "w")
@@ -3790,6 +3792,60 @@ class TestAddColumn:
         lake.append(spark.createDataFrame([(2,)], "k long"))
         got = {r.k: r.src for r in lake.snapshot().collect()}
         assert got == {1: None, 2: "backfill"}  # never backfilled
+
+
+class TestLogReadCounts:
+    """Each operation folds the log once: one checkpoint parse and
+    one read per tail commit, not one per metadata field."""
+
+    def _spy(self, lake):
+        counts = {"checkpoints": 0, "commits": []}
+        load, read = lake._load_checkpoint, lake._read_commit
+
+        def load_spy(path):
+            counts["checkpoints"] += 1
+            return load(path)
+
+        def read_spy(v):
+            counts["commits"].append(v)
+            return read(v)
+
+        lake._load_checkpoint = load_spy
+        lake._read_commit = read_spy
+        return counts
+
+    def test_scan_and_append_fold_once(self, spark, tmp_path):
+        lake = TransactionalLake(
+            spark, str(tmp_path / "rc"), partition_by=("date",),
+            generated_columns={"date": "to_date(timestamp)"},
+            bloom_columns=("symbol",), checkpoint_every=3,
+        )
+
+        def batch(i):
+            return spark.createDataFrame(
+                [(f"S{i}", float(i), f"2024-06-{10 + i} 09:30:00")],
+                "symbol string, price double, timestamp string",
+            ).withColumn("timestamp", F.col("timestamp").cast("timestamp"))
+
+        for i in range(10):
+            lake.append(batch(i))
+        assert lake.fold().checkpoint_version == 8
+        counts = self._spy(lake)
+        rows = lake.scan_between(
+            {"timestamp": ("2024-06-12 00:00:00", "2024-06-14 23:59:59")},
+            {"symbol": "S3"},
+        ).collect()
+        assert [r.symbol for r in rows] == ["S3"]
+        assert counts["checkpoints"] == 1
+        assert len(counts["commits"]) == len(set(counts["commits"]))
+        counts["checkpoints"], counts["commits"] = 0, []
+        v = lake.append(batch(10))
+        parsed = counts["checkpoints"]
+        assert v == 10
+        assert not os.path.exists(
+            os.path.join(lake.log_path, "00000010.checkpoint")
+        )
+        assert parsed <= 2, parsed
 
 
 class TestHistoryLimit:
@@ -4253,7 +4309,7 @@ class TestCopyInto:
         with pytest.raises(ValueError, match="price_pos"):
             lake.copy_into(str(src))
         # the failed copy recorded nothing: a fixed retry still loads
-        assert lake._copy_sources() == set()
+        assert lake.fold().copy_sources == set()
 
     def test_unknown_format_and_empty_dir(self, spark, lake, tmp_path):
         with pytest.raises(ValueError, match="unsupported FILEFORMAT"):
@@ -4663,7 +4719,7 @@ class TestDmlDataSkipping:
         lk.append(spark.createDataFrame([("9",)], "scol string"))
         old = lk._snapshot_state()[0]
         kept = lk._dml_prune(old, "scol <= '5'")
-        stats = lk._stats_index()
+        stats = lk.fold().stats
         ten_file = next(f for f in old if stats[f]["scol"][0] == "10")
         # lexical: '10' <= '5' TRUE; numeric: 10 <= 5 FALSE —
         # disagreement => the '10' file MUST be kept (a numeric guess

@@ -23,6 +23,8 @@ Usage: python tools/plan_audit.py [sf_dir] (default sf0.1)
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import sys
@@ -74,9 +76,10 @@ def write_report(
         df = REGISTRY[qname].fn(spark, sf_dir)
         out[label] = {"query": qname, **audit(df)}
         if dump_dir:
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            txt = buf.getvalue()
             with open(os.path.join(dump_dir, f"{label}.txt"), "w") as fh:
                 fh.write(txt)
         if log is not None:

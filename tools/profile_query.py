@@ -18,6 +18,8 @@ Names may be bench labels (q_triangle_count) or registry names
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import sys
@@ -129,9 +131,10 @@ def main() -> None:
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
             df = REGISTRY[qname].fn(spark, args.sf)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            txt = buf.getvalue()
             with open(os.path.join(args.explain, f"{qname}.txt"), "w") as fh:
                 fh.write(txt)
         profile(spark, base, qname, args.sf, args.runs)

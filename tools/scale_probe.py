@@ -495,8 +495,8 @@ def row_tracking_probe(spark, sf_dir: str) -> dict:
 
 def metadata_fold_probe(spark) -> dict:
     """r11 (VERDICT r10 #4): per-operation METADATA cost vs COMMIT
-    COUNT. ``_row_tracking_state`` and ``_column_mapping_doc`` fold
-    checkpoint + tail; the claim is that their cost — and the commit
+    COUNT. ``fold()`` (read here for row tracking and column mapping)
+    replays checkpoint + tail; the claim is that its cost — and the commit
     files they actually open — stays FLAT as the log grows (bounded
     by checkpoint_every, not by history length). Builds one table,
     drives the commit count to ~100 and ~1000 via set_properties
@@ -534,13 +534,13 @@ def metadata_fold_probe(spark) -> dict:
                 samples_rt, samples_map = [], []
                 for _ in range(20):
                     t0 = time.perf_counter()
-                    tx._row_tracking_state()
+                    tx.fold().row_tracking
                     samples_rt.append(time.perf_counter() - t0)
                 reads_per_rt = calls["n"] / 20
                 calls["n"] = 0
                 for _ in range(20):
                     t0 = time.perf_counter()
-                    tx._column_mapping_doc()
+                    tx.fold().column_mapping
                     samples_map.append(time.perf_counter() - t0)
                 reads_per_map = calls["n"] / 20
                 calls["n"] = 0
@@ -721,7 +721,7 @@ def cluster_probe(spark) -> dict:
         unclustered = [
             f
             for f in live_before
-            if f not in tx._clustering_state()["clustered"]
+            if f not in tx.fold().clustering["clustered"]
         ]
         t0 = time.perf_counter()
         tx.optimize_clustering()
